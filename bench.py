@@ -1,12 +1,14 @@
 """Benchmark harness (driver contract + BASELINE.md protocol).
 
-Phase A — north-rule scaling evidence: the full transcript rollup
-pipeline body (derive → 1m/1h/1d kernel rollups + conv-tier
-Lomb–Scargle + Gorilla/DoD compression) over a deterministic synthetic
-transcript table, executed in two COLD subprocesses on the SAME parquet
-input at two parallelism levels (local[2] ≙ N executors, local[8] ≙
-4N). Reports turns/sec at both and scaling efficiency = (thru₈/thru₂)/4.
-A correctness rider asserts the two runs' feature tables are identical
+Phase A — north-rule scaling evidence: the shipped pipeline,
+``plans.pipeline.run_pipeline`` (derive → 1m/1h/1d kernel rollups from
+one fused pass → Gorilla/DoD compression, with the ledger), over a
+deterministic synthetic transcript table into a fresh warehouse,
+executed in two COLD subprocesses on the SAME parquet input at two
+parallelism levels (local[2] ≙ N executors, local[8] ≙ 4N). Reports
+turns/sec at both and scaling efficiency = (thru₈/thru₂)/4. A
+correctness rider asserts every run's output tables (features_{tier},
+series, chunks — not the run-specific _ledger/_metrics) are identical
 (checksum) — partition-count independence at the bench scale.
 
 Why 2→8 and not 8→32: this sandbox VM advertises 32 CPUs but enforces a
@@ -100,8 +102,6 @@ BENCH_FEATS = [
     "total_time", "cads_avg", "cads_med", "cads_std",
     "cad_probs_10", "cad_probs_100", "cad_probs_1000",
 ]
-LS_FEATS = ["freq1_freq", "freq1_amplitude1", "freq1_signif", "period_fast",
-            "freq_varrat", "linear_trend"]
 
 HEADLINE = [
     "ts_rollup_1h_kernel", "ts_rollup_1d_native", "ts_gapfill_1h",
@@ -134,64 +134,9 @@ def _noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def pipeline_body(spark, input_path: str, out_root: str) -> None:
-    """The timed job: scan → derive → tiered rollups → LS → compress."""
-    import pyspark.sql.functions as F
-
-    from cesium_spark.codecs.chunks import encode_chunks
-    from cesium_spark.operators.derive import derive_series
-    from cesium_spark.operators.rollup import (
-        rollup_features,
-        rollup_moments,
-    )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    tr = spark.read.parquet(input_path)
-    series = derive_series(tr)
-    series.write.mode("overwrite").parquet(f"{out_root}/series")
-    series = spark.read.parquet(f"{out_root}/series")
-    from cesium_spark.operators.rollup import rollup_features_multi
-
-    # the four downstream consumers of `series` are INDEPENDENT jobs:
-    # submit them concurrently (SparkSession job submission is
-    # thread-safe) so per-job fixed cost overlaps and task slots stay
-    # fed across stage tails — on a cluster this is exactly how a bulk
-    # build would be driven. The tier rollup itself is ONE shuffle for
-    # all three tiers (rollup_features_multi): at 10^12 turns, one
-    # exchange of the turn stream instead of three.
-    jobs = [
-        ("tiers", lambda: (rollup_features_multi(series, ("1m", "1h", "1d"),
-                                                 BENCH_FEATS)
-                           .write.mode("overwrite").partitionBy("tier")
-                           .parquet(f"{out_root}/features"))),
-        # conv-tier Lomb–Scargle over the latency channel (the
-        # north_star's "LS periodogram peaks over turn-latency series")
-        ("ls", lambda: rollup_features(
-            series.where(F.col("channel") == "latency"), "conv", LS_FEATS)
-            .write.mode("overwrite").parquet(f"{out_root}/features_conv_ls")),
-        ("moments", lambda: _noop(rollup_moments(series, "1h"))),
-        ("codec", lambda: encode_chunks(series).write.mode("overwrite")
-            .parquet(f"{out_root}/chunks")),
-    ]
-    t0 = time.monotonic()
-
-    def _run(name, fn):
-        # One scheduler pool per concurrent job (thread-local property,
-        # a no-op under the default FIFO mode). A FAIR A/B was measured
-        # and REJECTED — see _phase_a_worker for the numbers; the pool
-        # tags are kept because they cost nothing and make per-job
-        # attribution in the UI/event log unambiguous either way.
-        spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", f"bench_{name}")
-        fn()
-        return round(time.monotonic() - t0, 2)
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = {n: ex.submit(_run, n, fn) for n, fn in jobs}
-        done_at = {n: f.result() for n, f in futures.items()}
-    if os.environ.get("CESIUM_BENCH_JOBTIMES"):
-        print(f"# jobtimes {json.dumps(done_at)}", file=sys.stderr)
+# the tables a pipeline run leaves that depend only on its input
+OUTPUT_TABLES = ("features_1m", "features_1h", "features_1d", "series",
+                 "chunks")
 
 
 def table_checksum(spark, path: str) -> int:
@@ -217,37 +162,33 @@ def _phase_a_worker(master: str, input_path: str, out: str,
     # goes to tmpfs, not heap) and bounds worst-case pre-touch wall when
     # the host is fully drained (~25 MB/s fresh-page rate → ~3 min).
     os.environ["CESIUM_SPARK_DRIVER_MEM"] = "4g"
-    # Scheduler mode for the four concurrent pipeline jobs. FAIR (one
-    # on-demand pool each) was hypothesized to fix the LS fit
-    # serializing behind the wide multi-tier job's waves under FIFO —
-    # measured back-to-back at 8 cores on the same input it LOSES:
-    # FIFO mix wall 33.0 s (tiers done 27.2, ls 29.9) vs FAIR 50.2 s
-    # (ls improves to 21.9 but tiers balloons to 43.9). Round-robin
-    # slot sharing starves the wide job, and the wide job — not LS —
-    # is the true critical path; per-section isolation runs (see
-    # tools/probe_scaling.py) show every section scales 0.90+ alone,
-    # so the FIFO mix's backfill already packs slots near-optimally.
-    # Negative result kept on a knob: CESIUM_BENCH_SCHED=FAIR re-runs
-    # the A/B; default stays FIFO.
-    sched = os.environ.get("CESIUM_BENCH_SCHED", "FIFO")
     spark = _session(master, local_dir=os.path.dirname(out),
                      extra_conf={"spark.driver.extraJavaOptions":
-                                 "-Xms4g -XX:+AlwaysPreTouch",
-                                 "spark.scheduler.mode": sched})
-    # Untimed warmup: run the FULL pipeline body once on a tiny slice
+                                 "-Xms4g -XX:+AlwaysPreTouch"})
+    from cesium_spark.plans.pipeline import run_pipeline
+    from cesium_spark.sources.table_io import TableIO
+
+    def build(path: str, root: str) -> None:
+        # a fresh warehouse each run: the ledger would skip every unit
+        # an earlier rep into the same root already finished
+        shutil.rmtree(root, ignore_errors=True)
+        run_pipeline(TableIO(spark, root), spark.read.parquet(path),
+                     features=BENCH_FEATS)
+
+    # Untimed warmup: run the FULL pipeline once on a tiny slice
     # (150 convs, ~1% of the timed input). This spins up the Python
-    # worker pool (pandas/pyarrow/numpy imports), query codegen for all
-    # four job shapes (multi-tier rollup, LS conv fit, moments, codec
+    # worker pool (pandas/pyarrow/numpy imports), query codegen for
+    # every job shape (derive, fused tier rollup, ledger, codec
     # encode), the parquet reader AND the committer once per JVM.
     # Measured decomposition (BENCH/BASELINE.md): the two-level wall
     # fits F + C/cores with F ≈ 13 s when only the 1h kernel was
-    # warmed — almost all of it first-call cost of the three unwarmed
-    # plan shapes, identical at both levels, so it dilutes the measured
+    # warmed — almost all of it first-call cost of the unwarmed plan
+    # shapes, identical at both levels, so it dilutes the measured
     # ratio without being engine work. BASELINE.md's protocol excludes
     # session startup from the timed body; at production scale these
     # amortize over hours.
     if warm_path:
-        pipeline_body(spark, warm_path, f"{out}_warm")
+        build(warm_path, f"{out}_warm")
     else:
         from cesium_spark.operators.derive import derive_series
         from cesium_spark.operators.rollup import rollup_features
@@ -259,10 +200,10 @@ def _phase_a_worker(master: str, input_path: str, out: str,
     # timed scan job before)
     turns = spark.read.parquet(input_path).count()
     t0 = time.monotonic()
-    pipeline_body(spark, input_path, out)
+    build(input_path, out)
     wall = time.monotonic() - t0
-    checksums = {t: table_checksum(spark, f"{out}/features/tier={t}")
-                 for t in ("1m", "1h", "1d")}
+    checksums = {t: table_checksum(spark, f"{out}/{t}")
+                 for t in OUTPUT_TABLES}
     spark.stop()
     print(json.dumps({"turns": turns, "wall_sec": round(wall, 2),
                       "turns_per_sec": round(turns / wall, 1),

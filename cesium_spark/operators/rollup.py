@@ -69,7 +69,8 @@ ROLLUP_MULTI_SCHEMA = (
     "window_start timestamp, feature string, value double"
 )
 
-_TIER_NP_UNIT = {"1m": "m", "1h": "h", "1d": "D"}
+# tiers rollup_features_multi computes -> numpy datetime64 unit
+MULTI_TIER_UNITS = {"1m": "m", "1h": "h", "1d": "D"}
 
 MOMENTS_SCHEMA_COLS = [
     "n", "y_min", "y_max", "y_sum", "y_sum2", "y_sum3", "t_min", "t_max",
@@ -245,21 +246,23 @@ def rollup_features_multi(series: DataFrame, tiers: Iterable[str],
     (conv, channel, GROUP_SPAN_DAYS date block) group, so one hash
     exchange + one sorted scan can emit every tier — at 10^12 turns
     that is one shuffle of the turn stream instead of three, and one
-    pass of kernel CPU amortized across tiers. Values are bit-identical
-    to per-tier :func:`rollup_features` calls (pinned by
+    pass of kernel CPU amortized across tiers. ``plans.pipeline``
+    builds every pending windowed tier with one call (the path
+    bench.py phase A and perfbench's backfill time). Values are
+    bit-identical to per-tier :func:`rollup_features` calls (pinned by
     tests/test_rollup_multi.py): the kernel derives each tier's window
     ids by numpy datetime64 truncation, which equals Spark's UTC
     ``date_trunc`` for post-epoch timestamps (the engine's domain)."""
     tiers = list(tiers)
-    bad = [t for t in tiers if t not in _TIER_NP_UNIT]
+    bad = [t for t in tiers if t not in MULTI_TIER_UNITS]
     if bad:
-        raise ValueError(f"rollup_features_multi supports {list(_TIER_NP_UNIT)}; "
+        raise ValueError(f"rollup_features_multi supports {list(MULTI_TIER_UNITS)}; "
                          f"got {bad} (run 'conv' via rollup_features)")
     feats = validate(list(features) if features is not None else DEFAULT_FEATS)
     n_feats = len(feats)
     meta_cols = _checked_meta_cols(meta)
     custom = custom_snapshot(feats)
-    tier_units = [(t, _TIER_NP_UNIT[t]) for t in tiers]
+    tier_units = [(t, MULTI_TIER_UNITS[t]) for t in tiers]
 
     def process_rows(pdf: pd.DataFrame) -> pd.DataFrame:
         conv = pdf["conv_id"].to_numpy()

@@ -4,6 +4,9 @@ partitions skipped."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +46,79 @@ def test_crash_resume_identical_output(spark, tiny_transcripts, tmp_path):
     assert report["stages"]["rollup_1h"] == {"skipped": True}
     for t in ("1h", "1d"):
         assert _table_checksum(io, f"features_{t}") == golden[t]
+
+
+def test_crash_before_ledger_append_resumes_fused_tiers(
+        spark, tiny_transcripts, tmp_path, monkeypatch):
+    """All three tiers share one kernel pass; a crash after features_1d
+    is written but before its ledger rows land must resume to the
+    uninterrupted tables (the overwrite leaves no duplicate rows) with
+    one ledger row per unit."""
+    tiers = ("1m", "1h", "1d")
+    io_ref = TableIO(spark, str(tmp_path / "ref"))
+    run_pipeline(io_ref, tiny_transcripts, tiers=tiers, features=FEATS,
+                 compress=False)
+    golden = {t: _table_checksum(io_ref, f"features_{t}") for t in tiers}
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    record_done = Ledger.record_done
+
+    def crash_on_1d(self, run_id, stage, per_unit, wall_ms):
+        if stage == "rollup_1d":
+            raise RuntimeError("injected crash before the ledger append")
+        record_done(self, run_id, stage, per_unit, wall_ms)
+
+    with monkeypatch.context() as m:
+        m.setattr(Ledger, "record_done", crash_on_1d)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_pipeline(io, tiny_transcripts, tiers=tiers, features=FEATS,
+                         compress=False)
+    assert io.exists("features_1d")
+
+    report = run_pipeline(io, tiny_transcripts, tiers=tiers, features=FEATS,
+                          compress=False)
+    assert report["stages"]["rollup_1m"] == {"skipped": True}
+    assert report["stages"]["rollup_1h"] == {"skipped": True}
+    assert report["stages"]["rollup_1d"] != {"skipped": True}
+    for t in tiers:
+        assert _table_checksum(io, f"features_{t}") == golden[t], t
+    done = (Ledger(io).entries().where("state = 'done'")
+            .groupBy("stage", "window_date").count().toPandas())
+    assert set(done["stage"]) == {f"rollup_{t}" for t in tiers}
+    assert (done["count"] == 1).all()
+
+
+def test_run_metrics_are_one_append(spark, tiny_transcripts, tmp_path):
+    """Each run adds exactly one _metrics file holding all its metrics,
+    and a run that dies still records the stage walls it reached."""
+    io = TableIO(spark, str(tmp_path / "m"))
+    ledger = Ledger(io)
+
+    def files():
+        return sorted(glob.glob(os.path.join(io.path("_metrics"),
+                                             "part-*.parquet")))
+
+    def metrics_in(path, run_id):
+        rows = spark.read.parquet(path).where(F.col("run_id") == run_id)
+        return {(r["stage"], r["metric"]) for r in rows.collect()}
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"),
+                     features=FEATS, compress=False, run_id="crashed",
+                     fail_after_stage="rollup_1h")
+    [first] = files()
+    assert metrics_in(first, "crashed") == {("derive", "wall_ms"),
+                                            ("rollup_1h", "wall_ms")}
+
+    run_pipeline(io, tiny_transcripts, tiers=("1h", "1d"), features=FEATS,
+                 compress=False, run_id="resumed")
+    [second] = sorted(set(files()) - {first})
+    want = {("derive", "wall_ms"), ("rollup_1h", "wall_ms"),
+            ("rollup_1d", "wall_ms"), ("pipeline", "turns"),
+            ("pipeline", "turns_per_sec")}
+    assert metrics_in(second, "resumed") == want
+    total = ledger.metrics().where(F.col("run_id") == "resumed").count()
+    assert total == len(want)
 
 
 def test_ledger_lineage_per_partition(spark, tiny_transcripts, tmp_path):

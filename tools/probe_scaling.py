@@ -1,65 +1,46 @@
 """Phase-A scaling decomposition probe (diagnostic, not shipped in bench).
 
-Runs the phase-A pipeline SECTIONS in isolation — series write, then
-each of the four downstream jobs sequentially — inside one pinned JVM
-per parallelism level, and prints per-section walls.  Purpose: separate
-intrinsic per-job scaling loss (a section whose n2/n8 ratio is << 4 in
-isolation) from concurrency packing loss (sections fine alone, mix bad).
+Runs the phase-A pipeline (``run_pipeline``, as bench.py times it)
+inside one pinned JVM per parallelism level, after the same warm-up
+build, and prints the wall of each pipeline stage (derive, rollup_1m,
+rollup_1h, rollup_1d, compress) from the run report. Purpose: separate
+a stage whose n2/n8 ratio is << 4 (intrinsic scaling loss) from
+per-stage fixed cost that is the same at every level.
 
-Usage:  taskset -c 0-7 python tools/probe_scaling.py local[8] <input> <out>
+Usage:  taskset -c 0-7 python tools/probe_scaling.py local[8] <input> <out> <warm>
 """
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    master, input_path, out = sys.argv[1], sys.argv[2], sys.argv[3]
+    master, input_path, out, warm_path = sys.argv[1:5]
     os.environ["CESIUM_SPARK_DRIVER_MEM"] = "4g"
     os.environ["SPARK_GRAFT_CPUS"] = master[master.find("[") + 1:-1]
     import bench
-    import pyspark.sql.functions as F
-    from cesium_spark.codecs.chunks import encode_chunks
-    from cesium_spark.operators.derive import derive_series
-    from cesium_spark.operators.rollup import (
-        rollup_features, rollup_features_multi, rollup_moments)
+    from cesium_spark.plans.pipeline import run_pipeline
+    from cesium_spark.sources.table_io import TableIO
 
     spark = bench._session(master, local_dir=os.path.dirname(out),
                            extra_conf={"spark.driver.extraJavaOptions":
                                        "-Xms4g -XX:+AlwaysPreTouch"})
-    # warm all four job shapes (same as bench warmup)
-    bench.pipeline_body(spark, sys.argv[4], f"{out}_warm")
-
-    t: dict[str, float] = {}
-
-    def sect(name, fn):
-        t0 = time.monotonic()
-        fn()
-        t[name] = round(time.monotonic() - t0, 2)
-        print(f"# {name}: {t[name]}", file=sys.stderr)
-
-    tr = spark.read.parquet(input_path)
-    sect("series_write", lambda: derive_series(tr).write.mode("overwrite")
-         .parquet(f"{out}/series"))
-    series = spark.read.parquet(f"{out}/series")
-    sect("tiers", lambda: (rollup_features_multi(
-        series, ("1m", "1h", "1d"), bench.BENCH_FEATS)
-        .write.mode("overwrite").partitionBy("tier")
-        .parquet(f"{out}/features")))
-    sect("ls", lambda: rollup_features(
-        series.where(F.col("channel") == "latency"), "conv", bench.LS_FEATS)
-        .write.mode("overwrite").parquet(f"{out}/features_conv_ls"))
-    sect("moments", lambda: bench._noop(rollup_moments(series, "1h")))
-    sect("codec", lambda: encode_chunks(series).write.mode("overwrite")
-         .parquet(f"{out}/chunks"))
+    reports = []
+    for path, root in ((warm_path, f"{out}_warm"), (input_path, out)):
+        shutil.rmtree(root, ignore_errors=True)
+        reports.append(run_pipeline(TableIO(spark, root),
+                                    spark.read.parquet(path),
+                                    features=bench.BENCH_FEATS))
     spark.stop()
-    print(json.dumps({"master": master, "sections": t,
-                      "total": round(sum(t.values()), 2)}))
+    stages = {k: round(v / 1000.0, 2) for k, v in reports[-1]["stages"].items()
+              if isinstance(v, int)}
+    print(json.dumps({"master": master, "sections": stages,
+                      "total": round(reports[-1]["wall_sec"], 2)}))
 
 
 if __name__ == "__main__":
